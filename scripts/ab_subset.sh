@@ -6,6 +6,8 @@
 #   scripts/ab_subset.sh <baseDir> <candDir> <onlyList> <rounds> <outPrefix>
 set -euo pipefail
 BASE="$1"; CAND="$2"; ONLY="$3"; ROUNDS="${4:-2}"; PREF="${5:-/tmp/ab}"
+# a stale JSON from an earlier A/B must never stand in for a failed run
+rm -f "${PREF}"_*_r*.json
 for r in $(seq 1 "$ROUNDS"); do
   for side in base cand; do
     dir=$([ "$side" = base ] && echo "$BASE" || echo "$CAND")
@@ -15,7 +17,10 @@ for r in $(seq 1 "$ROUNDS"); do
     SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-90g}" \
     SPARK_GRAFT_BENCH_OUT="${PREF}_${side}_r${r}.json" \
       "$dir/scripts/run_main.sh" graft.Bench \
-      > "${PREF}_${side}_r${r}.log" 2>&1 || echo "RUN FAILED: $side r$r"
+      > "${PREF}_${side}_r${r}.log" 2>&1 || {
+        echo "RUN FAILED: $side r$r (see ${PREF}_${side}_r${r}.log)" >&2
+        exit 1
+      }
   done
 done
 python3 - "$PREF" "$ROUNDS" <<'EOF'

@@ -2719,54 +2719,22 @@ object CommittedTable {
   def deleteKeys(spark: SparkSession, path: String, keys: DataFrame,
       key: String, partitionCol: String,
       crashPoint: String => Unit = _ => ()): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val table = new Path(path)
-    val fs = table.getFileSystem(hconf)
-    val m = readManifest(fs, table).getOrElse(
-      throw new java.io.IOException(s"no committed table at $path to delete from"))
-    collectGarbage(fs, table)
-    if (m.segments.isEmpty) return
-    require(m.cols.contains(partitionCol),
-      s"$partitionCol is not a column of the committed table (${m.cols.mkString(",")})")
+    val t = openScoped(spark, path, "to delete from", partitionCol)
+      .getOrElse(return)
     val keySet = keys.select(col(key)).distinct()
-    // sidecar prune FIRST (when the table blooms `key` and the probe set
-    // is small): the affected-partition discovery scan — previously the
-    // full table — opens only segments that can contain a probed key
-    val candidates: Option[Seq[String]] =
-      if (m.bloomCols.contains(key))
-        probeHashes(keySet, key).flatMap(hs =>
-          bloomSurvivors(spark, table, m, key, hs))
-      else None
+    // sidecar prune FIRST: the affected-partition discovery scan opens
+    // only segments that can contain a probed key
+    val candidates = keyCandidates(spark, t.table, t.m, keySet, key)
     if (candidates.exists(_.isEmpty)) return // no segment can hold any key
-    val affected: Array[String] = readFrom(spark, table, m, candidates)
+    val affected = readFrom(spark, t.table, t.m, candidates)
       .join(keySet, Seq(key), "left_semi")
       .select(col(partitionCol)).distinct()
-      .collect().map(_.getString(0))
+      .collect().map(_.getString(0)).toIndexedSeq
     if (affected.isEmpty) return
-    val keep = readFrom(spark, table, m, Some(affected.toIndexedSeq))
-      .join(keySet, Seq(key), "left_anti")
-    crashPoint("before-staging")
-    val gen = m.gen + 1
-    val (clSort, clFpp, clParts) = clusterArgs(m, affected.length)
-    val staged = stageSegments(keep, path, partitionCol, gen,
-      sortCols = clSort, filesPerPartition = clFpp,
-      bucketing = m.bucketing, rangeClusterParts = clParts)
-    crashPoint("after-staging")
-    val (segStats, segCounts, segFileStats) =
-      statsFromStaged(spark, table, staged, partitionCol, m.statsCols,
-        m.bloomCols)
-    val next = m.copy(gen = gen,
-      fileStats = m.fileStats ++ segFileStats,
-      segments = (m.segments -- affected) ++
-        staged.view.filterKeys(affected.contains),
-      stats = (m.stats -- affected) ++
-        segStats.view.filterKeys(affected.contains),
-      rowCounts = (m.rowCounts -- affected) ++
-        segCounts.view.filterKeys(affected.contains))
-    crashPoint("before-swap")
-    publishOrAbort(hconf, table, m.gen, next, staged, op = Some("delete-keys"))
-    crashPoint("after-swap")
-    collectGarbage(fs, table)
+    publishCow(t, "delete-keys", partitionCol, affected,
+      readFrom(spark, t.table, t.m, Some(affected))
+        .join(keySet, Seq(key), "left_anti"),
+      checked = false, crashPoint)
   }
 
   /** PARTITION EVOLUTION: re-key the table's physical layout to
@@ -2797,12 +2765,8 @@ object CommittedTable {
   def repartitionTable(spark: SparkSession, path: String,
       newPartitionCol: String,
       crashPoint: String => Unit = _ => ()): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val table = new Path(path)
-    val fs = table.getFileSystem(hconf)
-    val m = readManifest(fs, table).getOrElse(
-      throw new java.io.IOException(s"no committed table at $path"))
-    collectGarbage(fs, table)
+    val t = openTable(spark, path, "to repartition")
+    import t.{fs, hconf, m, table}
     require(m.cols.contains(newPartitionCol),
       s"$newPartitionCol is not a column of the committed table " +
         s"(${m.cols.mkString(",")})")
@@ -2858,53 +2822,21 @@ object CommittedTable {
     * (segments that cannot hold a probed key are never opened), so a
     * 1k-key takedown against a thousand-partition table is: probe the
     * sidecars, open the surviving segments once, write 1k positions,
-    * swap one manifest. Same self-invalidation/GC/count protocol as
-    * every vector; a later rewrite or [[compactPartitions]] of the
-    * affected partitions materializes it. */
+    * swap one manifest. */
   def deleteKeysMor(spark: SparkSession, path: String, keys: DataFrame,
       key: String, partitionCol: String,
       crashPoint: String => Unit = _ => ()): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val table = new Path(path)
-    val fs = table.getFileSystem(hconf)
-    val m = readManifest(fs, table).getOrElse(
-      throw new java.io.IOException(s"no committed table at $path to delete from"))
-    collectGarbage(fs, table)
-    if (m.segments.isEmpty) return
-    require(m.cols.contains(partitionCol),
-      s"$partitionCol is not a column of the committed table (${m.cols.mkString(",")})")
+    val t = openScoped(spark, path, "to delete from", partitionCol)
+      .getOrElse(return)
     val keySet = keys.select(col(key)).distinct()
-    val candidates: Option[Seq[String]] =
-      if (m.bloomCols.contains(key))
-        probeHashes(keySet, key).flatMap(hs =>
-          bloomSurvivors(spark, table, m, key, hs))
-      else None
+    val candidates = keyCandidates(spark, t.table, t.m, keySet, key)
     if (candidates.exists(_.isEmpty)) return // no segment can hold any key
-    val hits = readFrom(spark, table, m, candidates, keepPos = true)
-      .join(keySet, Seq(key), "left_semi")
-      .select(col(partitionCol).cast("string").as("__part"),
-        col(DvFileCol).as("file"), col(DvPosCol).as("pos"))
+    val hits = positions(readFrom(spark, t.table, t.m, candidates,
+        keepPos = true).join(keySet, Seq(key), "left_semi"), partitionCol)
       .persist()
-    try {
-      val perPart: Map[String, Long] = hits.groupBy("__part").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (perPart.isEmpty) return // nothing matches: no generation burned
-      crashPoint("before-dv-write")
-      val gen = m.gen + 1
-      val priors: Map[String, DvRef] = perPart.keysIterator
-        .flatMap(p => liveDv(m, p).map(p -> _)).toMap
-      val dvName = stageDvDir(spark, table, m,
-        hits.select(col("file"), col("pos")), perPart.keySet, gen)
-      crashPoint("before-swap")
-      val next = m.copy(gen = gen, dvs = m.dvs ++ perPart.keysIterator.map(p =>
-        p -> DvRef(segLeaf(m.segments(p)), dvName,
-          perPart(p) + priors.get(p).map(_.rows).getOrElse(0L), gen)).toMap)
-      try publishOrAbort(hconf, table, m.gen, next, Map.empty, op = Some("delete-keys-mor"))
-      catch { case e: Throwable =>
-        fs.delete(new Path(table, dvName), true); throw e }
-      crashPoint("after-swap")
-      collectGarbage(fs, table)
-    } finally hits.unpersist()
+    try publishMor(t, "delete-keys-mor", partitionCol, hits, None,
+      inserts = false, crashPoint)
+    finally hits.unpersist()
   }
 
   /** Per-partition zone-map stats (min/max of each stats column, in the
@@ -3147,14 +3079,19 @@ object CommittedTable {
     require(m.cols.contains(key),
       s"$key is not a column of the committed table (${m.cols.mkString(",")})")
     val keySet = keys.select(col(key)).distinct()
-    // same guard as deleteKeys: no sidecar on `key` ⇒ skip the probe
-    // collect outright instead of discarding its result
-    val pruned =
-      if (!m.bloomCols.contains(key)) None
-      else probeHashes(keySet, key)
-        .flatMap(hs => bloomSurvivors(spark, table, m, key, hs))
-    readFrom(spark, table, m, pruned).join(keySet, Seq(key), "left_semi")
+    readFrom(spark, table, m, keyCandidates(spark, table, m, keySet, key))
+      .join(keySet, Seq(key), "left_semi")
   }
+
+  /** The partitions a probe of `keySet` on `key` can touch, from the
+    * bloom sidecars alone — None when `key` is not bloomed (the probe
+    * collect is skipped outright rather than discarded) or the probe set
+    * is too large to prune by. */
+  private def keyCandidates(spark: SparkSession, table: Path, m: Manifest,
+      keySet: DataFrame, key: String): Option[Seq[String]] =
+    if (!m.bloomCols.contains(key)) None
+    else probeHashes(keySet, key)
+      .flatMap(hs => bloomSurvivors(spark, table, m, key, hs))
 
   // ---- Composite (multi-column) partitioning -----------------------------
   //
@@ -3237,14 +3174,9 @@ object CommittedTable {
     * columns, not the key) and routes to the standard keyed merge. */
   def mergeComposite(spark: SparkSession, path: String, updates: DataFrame,
       key: String, versionCol: String, partitionCols: Seq[String],
-      keyName: String = "part_key", allowAddColumns: Boolean = false): Unit = {
-    partitionCols.foreach(c => require(updates.columns.contains(c),
-      s"partition column $c absent from the update batch " +
-        s"(${updates.columns.mkString(",")})"))
-    merge(spark, path,
-      updates.withColumn(keyName, compositeKey(partitionCols.map(col): _*)),
+      keyName: String = "part_key", allowAddColumns: Boolean = false): Unit =
+    merge(spark, path, withCompositeKey(updates, partitionCols, keyName),
       key, versionCol, keyName, allowAddColumns)
-  }
 
   /** [[mergeComposite]] with [[mergeMor]]'s cost shape: derives the
     * composite partition key for the batch and publishes superseded
@@ -3254,13 +3186,18 @@ object CommittedTable {
     * Same arbitration/refusal contracts as [[mergeMor]]. */
   def mergeCompositeMor(spark: SparkSession, path: String,
       updates: DataFrame, key: String, versionCol: String,
-      partitionCols: Seq[String], keyName: String = "part_key"): Unit = {
+      partitionCols: Seq[String], keyName: String = "part_key"): Unit =
+    mergeMor(spark, path, withCompositeKey(updates, partitionCols, keyName),
+      key, versionCol, keyName)
+
+  /** An update batch carrying the COMPONENT columns, with the composite
+    * partition key derived as `keyName`. */
+  private def withCompositeKey(updates: DataFrame, partitionCols: Seq[String],
+      keyName: String): DataFrame = {
     partitionCols.foreach(c => require(updates.columns.contains(c),
       s"partition column $c absent from the update batch " +
         s"(${updates.columns.mkString(",")})"))
-    mergeMor(spark, path,
-      updates.withColumn(keyName, compositeKey(partitionCols.map(col): _*)),
-      key, versionCol, keyName)
+    updates.withColumn(keyName, compositeKey(partitionCols.map(col): _*))
   }
 
   private def statCompare(dt: org.apache.spark.sql.types.DataType)
@@ -3698,34 +3635,205 @@ object CommittedTable {
       s"no committed table at $path (missing $Commit)"))
   }
 
+  // ---- row-level DML -----------------------------------------------------
+  // Every DML verb — merge, delete, deleteKeys, update, mergeClauses, each
+  // in a copy-on-write and a merge-on-read (`*Mor`) form — runs one
+  // pipeline: verb → retired + written rows → copy-on-write or
+  // merge-on-read publish (Iceberg's row-level modes; Delta deletion
+  // vectors). [[openTable]] loads the manifest and collects garbage; the
+  // verb works out only its own change; then
+  //  - [[publishCow]] retires whole partitions: it restages every
+  //    affected partition from the verb's replacement rows (survivors
+  //    plus written rows) and points the partition's entry at the new
+  //    segment;
+  //  - [[publishMor]] retires rows by (file, row_index) position into one
+  //    deletion vector and appends the written rows as delta segments
+  //    (a brand-new partition's as its first segment); base segments
+  //    stay untouched. It is the one place that counts retired rows per
+  //    partition and builds DvRef/DeltaRef entries.
+  // Both are the DML verbs' only route to [[publishOrAbort]], and both
+  // fire the crashPoint test seam in one order: before-staging,
+  // after-staging, before-dv-write (merge-on-read only), before-swap,
+  // after-swap — a vector-only change (the MoR deletes) stages nothing
+  // and skips the two staging labels. Every verb is scan-scoped: it
+  // never rebases and aborts loudly under contention (re-run it on top
+  // of the winner).
+
+  /** A row-rewriting verb's target: the table and the manifest it plans
+    * against. */
+  private final case class Target(spark: SparkSession, path: String,
+      m: Manifest) {
+    val table = new Path(path)
+    def hconf = spark.sparkContext.hadoopConfiguration
+    def fs: FileSystem = table.getFileSystem(hconf)
+  }
+
+  /** The prelude of every row-rewriting verb (DML, compaction,
+    * repartition, overwrite): the manifest (a loud error naming the path
+    * and `what` the verb wanted when absent), then GC — which also frees
+    * a crashed generation's segment names. */
+  private def openTable(spark: SparkSession, path: String,
+      what: String): Target = {
+    val table = new Path(path)
+    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val m = readManifest(fs, table).getOrElse(
+      throw new java.io.IOException(s"no committed table at $path $what"))
+    collectGarbage(fs, table)
+    Target(spark, path, m)
+  }
+
+  /** [[openTable]] for a verb scoped by a caller-named partition column:
+    * None — nothing to change, no generation burned — on an empty table
+    * or a `noop` call, else the column must belong to the table. */
+  private def openScoped(spark: SparkSession, path: String, what: String,
+      partitionCol: String, noop: Boolean = false): Option[Target] = {
+    val t = openTable(spark, path, what)
+    if (t.m.segments.isEmpty || noop) return None
+    require(t.m.cols.contains(partitionCol),
+      s"$partitionCol is not a column of the committed table (${t.m.cols.mkString(",")})")
+    Some(t)
+  }
+
+  /** Partitions holding a row `matched` selects (one metadata-bounded
+    * collect; the scan is manifest-resolved and the predicate pushed). */
+  private def partsMatching(spark: SparkSession, path: String,
+      partitionCol: String, matched: org.apache.spark.sql.Column)
+      : IndexedSeq[String] =
+    read(spark, path).filter(matched)
+      .select(col(partitionCol)).distinct()
+      .collect().map(_.getString(0)).toIndexedSeq
+
+  /** Retired-row positions of `df` (a `keepPos` read, possibly joined
+    * under the `qual` alias): (`__part`, `file`, `pos`). */
+  private def positions(df: DataFrame, partitionCol: String,
+      qual: String = ""): DataFrame =
+    df.select(col(s"$qual$partitionCol").cast("string").as("__part"),
+      col(s"$qual$DvFileCol").as("file"), col(s"$qual$DvPosCol").as("pos"))
+
+  /** Copy-on-write publish of a change that retires every live row of
+    * `affected` and writes `rows` — those partitions' complete new
+    * content. Stages under the declared clustering and the table's
+    * bucketing, reads the staged files back once (counts, zone maps,
+    * blooms, and — when the verb creates or modifies rows, `checked` —
+    * the table's CHECKs), and swaps a manifest whose affected entries
+    * name the staged segments; an affected partition that staged nothing
+    * lost its last row, and dropping its entry IS its retirement. */
+  private def publishCow(t: Target, op: String, partitionCol: String,
+      affected: Seq[String], rows: DataFrame, checked: Boolean,
+      crashPoint: String => Unit): Unit = {
+    val m = t.m
+    crashPoint("before-staging")
+    val gen = m.gen + 1
+    val (clSort, clFpp, clParts) = clusterArgs(m, affected.length)
+    val staged = stageSegments(rows, t.path, partitionCol, gen,
+      sortCols = clSort, filesPerPartition = clFpp,
+      bucketing = m.bucketing, rangeClusterParts = clParts)
+    crashPoint("after-staging")
+    val (segStats, segCounts, segFileStats) =
+      statsFromStaged(t.spark, t.table, staged, partitionCol, m.statsCols,
+        m.bloomCols, if (checked) m.checks else Nil)
+    val mine = affected.toSet
+    val next = m.copy(gen = gen,
+      fileStats = m.fileStats ++ segFileStats,
+      segments = (m.segments -- affected) ++ staged.view.filterKeys(mine),
+      stats = (m.stats -- affected) ++ segStats.view.filterKeys(mine),
+      rowCounts = (m.rowCounts -- affected) ++ segCounts.view.filterKeys(mine))
+    crashPoint("before-swap")
+    publishOrAbort(t.hconf, t.table, m.gen, next, staged, op = Some(op))
+    crashPoint("after-swap")
+    collectGarbage(t.fs, t.table)
+  }
+
+  /** Merge-on-read publish of a change that retires `retired` — the
+    * (`__part`, `file`, `pos`) [[positions]] of live rows — and writes
+    * `written` (None: a vector-only change). `inserts` says whether the
+    * written rows may include rows that retire nothing; when they cannot,
+    * a change that retires nothing is a no-op before any crash point,
+    * and any change that ends up neither retiring nor writing burns no
+    * generation. Written rows stage with the declared clustering's SORT
+    * (zone-map tightness), never its file fan-out — a delta batch is
+    * small — and through the table's bucketing (pmod(murmur3, n) split,
+    * `_NNNNN` names), so base ∪ delta files keep grouping by bucket id
+    * and the exchange-free join survives; they re-validate the table's
+    * CHECKs (carried rows already passed). The retired positions fold
+    * into ONE deletion vector with the touched partitions' prior ones
+    * (the sets are disjoint: prior rows are invisible to every scan, so
+    * counts stay exact), and an extended partition's zone map widens to
+    * the union bound over base ∪ delta. */
+  private def publishMor(t: Target, op: String, partitionCol: String,
+      retired: DataFrame, written: Option[DataFrame], inserts: Boolean,
+      crashPoint: String => Unit): Unit = {
+    val m = t.m
+    val dvPerPart: Map[String, Long] = retired.groupBy("__part").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    if (dvPerPart.isEmpty && !inserts) return
+    val gen = m.gen + 1
+    val staged: Map[String, String] = written match {
+      case None => Map.empty
+      case Some(rows) =>
+        crashPoint("before-staging")
+        val s = stageSegments(rows, t.path, partitionCol, gen,
+          sortCols = m.clusterBy.map(_._1).getOrElse(Nil),
+          bucketing = m.bucketing)
+        if (s.isEmpty && dvPerPart.isEmpty) return
+        crashPoint("after-staging")
+        s
+    }
+    val (dStats, dCounts, dFileStats) =
+      statsFromStaged(t.spark, t.table, staged, partitionCol, m.statsCols,
+        m.bloomCols, m.checks)
+    val newParts = staged.keySet -- m.segments.keySet
+    val deltaParts = staged.keySet & m.segments.keySet
+    crashPoint("before-dv-write")
+    val dvName =
+      if (dvPerPart.isEmpty) None
+      else Some(stageDvDir(t.spark, t.table, m,
+        retired.select(col("file"), col("pos")), dvPerPart.keySet, gen))
+    val stats =
+      if (deltaParts.isEmpty) m.stats
+      else {
+        val schema = schemaOf(t.spark, t.table, m)
+        deltaParts.foldLeft(m.stats) { (acc, p) =>
+          widenStats(acc.get(p), dStats.get(p), schema, m.statsCols) match {
+            case Some(s) => acc + (p -> s)
+            case None => acc - p
+          }
+        }
+      }
+    val next = m.copy(gen = gen,
+      segments = m.segments ++ staged.view.filterKeys(newParts),
+      stats = stats ++ dStats.view.filterKeys(newParts),
+      rowCounts = m.rowCounts ++ dCounts.view.filterKeys(newParts),
+      fileStats = m.fileStats ++ dFileStats,
+      deltas = m.deltas ++ deltaParts.map(p =>
+        p -> (liveDeltas(m, p) :+ DeltaRef(segLeaf(m.segments(p)),
+          staged(p), dCounts(p), gen))),
+      dvs = m.dvs ++ dvName.toSeq.flatMap(n => dvPerPart.map { case (p, rows) =>
+        p -> DvRef(segLeaf(m.segments(p)), n,
+          rows + liveDv(m, p).map(_.rows).getOrElse(0L), gen) }))
+    crashPoint("before-swap")
+    try publishOrAbort(t.hconf, t.table, m.gen, next, staged, op = Some(op))
+    catch { case e: Throwable =>
+      dvName.foreach(n => t.fs.delete(new Path(t.table, n), true)); throw e }
+    crashPoint("after-swap")
+    collectGarbage(t.fs, t.table)
+  }
+
   /** Keyed latest-version-wins merge with an ATOMIC publish: identical
     * merge semantics to [[Warehouse.merge]] (same affected-partition set,
     * same window, only affected partitions rewritten), but the publish is
     * one manifest swap — a reader or a crash can never observe a mix of
-    * generations. `crashPoint` is a test seam: invoked with a stage label
-    * before each irreversible step so specs can kill the publish anywhere
-    * and prove old-or-new visibility. */
+    * generations. */
   def merge(spark: SparkSession, path: String, updates: DataFrame,
       key: String, versionCol: String, partitionCol: String,
       allowAddColumns: Boolean = false,
       crashPoint: String => Unit = _ => ()): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val table = new Path(path)
-    val fs = table.getFileSystem(hconf)
-    val m = readManifest(fs, table).getOrElse(
-      throw new java.io.IOException(s"no committed table at $path to merge into"))
-    collectGarbage(fs, table) // frees a crashed generation's segment names
-    require(updates.columns.contains(partitionCol) && updates.columns.contains(key)
-        && updates.columns.contains(versionCol),
-      s"updates must carry $key, $versionCol, $partitionCol")
-
+    val t = openTable(spark, path, "to merge into")
+    val m = t.m
     // same evolution contract as Warehouse.merge, recorded in the manifest
     // itself (the natural home for table schema): adds allowed behind the
     // opt-in, drops/renames rejected loudly
-    val dropped = m.cols.toSet -- updates.columns.toSet
-    require(dropped.isEmpty,
-      s"updates are missing table columns ${dropped.mkString(",")}: dropping " +
-        "or renaming a column is not supported by merge")
+    requireMergeBatch(m, updates, key, versionCol, partitionCol, "merge")
     val added = updates.columns.toSeq.filterNot(m.cols.contains)
     require(added.isEmpty || allowAddColumns,
       s"updates carry columns ${added.mkString(",")} the table lacks; pass " +
@@ -3766,40 +3874,31 @@ object CommittedTable {
       .select(cols.map(col).toIndexedSeq: _*)
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
+    publishCow(t.copy(m = withRoles(m.copy(cols = cols.toSeq), partitionCol,
+      key, versionCol)), "merge", partitionCol, affected.toIndexedSeq,
+      merged, checked = true, crashPoint)
+  }
 
-    crashPoint("before-staging")
-    val gen = m.gen + 1
-    val (clSort, clFpp, clParts) = clusterArgs(m, affected.length)
-    val staged = stageSegments(merged, path, partitionCol, gen,
-      sortCols = clSort, filesPerPartition = clFpp,
-      bucketing = m.bucketing, rangeClusterParts = clParts)
-    crashPoint("after-staging")
+  /** The keyed batch contract [[merge]] and [[mergeMor]] share: the batch
+    * carries key, version and partition, and every table column. */
+  private def requireMergeBatch(m: Manifest, updates: DataFrame, key: String,
+      versionCol: String, partitionCol: String, verb: String): Unit = {
+    require(updates.columns.contains(partitionCol) && updates.columns.contains(key)
+        && updates.columns.contains(versionCol),
+      s"updates must carry $key, $versionCol, $partitionCol")
+    val dropped = m.cols.toSet -- updates.columns.toSet
+    require(dropped.isEmpty,
+      s"updates are missing table columns ${dropped.mkString(",")}: dropping " +
+        s"or renaming a column is not supported by $verb")
+  }
 
-    // new manifest: affected entries replaced by their staged segments; an
-    // affected partition with NO staged segment lost its last row to a key
-    // move — dropping its entry IS its retirement
-    val (segStats, segCounts, segFileStats) =
-      statsFromStaged(spark, table, staged, partitionCol, m.statsCols,
-        m.bloomCols, m.checks)
-    // keycol/vercol metadata backfills from the first merge of a
-    // pre-feature table (the merge call IS the declaration of the key
-    // protocol); partcol likewise
-    val next = m.copy(gen = gen, cols = cols.toSeq,
-      fileStats = m.fileStats ++ segFileStats,
-      segments = (m.segments -- affected) ++
-        staged.view.filterKeys(affected.contains),
-      stats = (m.stats -- affected) ++
-        segStats.view.filterKeys(affected.contains),
-      rowCounts = (m.rowCounts -- affected) ++
-        segCounts.view.filterKeys(affected.contains),
-      partitionCol = m.partitionCol.orElse(Some(partitionCol)),
+  /** Role metadata backfills from the first keyed merge of a pre-feature
+    * table (the merge call IS the declaration of the key protocol). */
+  private def withRoles(m: Manifest, partitionCol: String, key: String,
+      versionCol: String): Manifest =
+    m.copy(partitionCol = m.partitionCol.orElse(Some(partitionCol)),
       keyCol = m.keyCol.orElse(Some(key)),
       verCol = m.verCol.orElse(Some(versionCol)))
-    crashPoint("before-swap")
-    publishOrAbort(hconf, table, m.gen, next, staged, op = Some("merge"))
-    crashPoint("after-swap")
-    collectGarbage(fs, table)
-  }
 
   /** One WHEN clause of [[mergeClauses]]. Conditions and assignment /
     * insert values are Columns over the TWO-SIDED namespace `t.<col>`
@@ -3900,6 +3999,14 @@ object CommittedTable {
       s"source must not carry reserved columns ${reserved.mkString(",")}")
 
     val cols = m.cols
+    // CDC visibility: a version-consuming table must see every change as
+    // a (key, version) transition — update()'s contract, enforced here
+    // for every clause that writes rows
+    def reqVer(set: Map[String, Column], what: String): Unit =
+      m.verCol.foreach(v => require(set.contains(v),
+        s"this table is consumed via keys/cdf change feeds keyed on " +
+          s"version column $v: $what must assign a bumped $v in the same " +
+          "clause or the change is invisible to CDC consumers"))
     def checkSet(set: Map[String, Column], what: String): Unit = {
       val unknown = set.keySet -- cols.toSet
       require(unknown.isEmpty,
@@ -3908,6 +4015,7 @@ object CommittedTable {
       require(!set.contains(key),
         s"$what must not assign the key column $key: re-keying a row is a " +
           "DELETE plus an INSERT — write it as those clauses")
+      reqVer(set, what)
     }
     matched.foreach {
       case MatchedUpdate(_, set) => checkSet(set, "WHEN MATCHED UPDATE")
@@ -3926,26 +4034,7 @@ object CommittedTable {
       require(c.values.contains(key) && c.values.contains(pc),
         s"WHEN NOT MATCHED INSERT must assign the key ($key) and " +
           s"partition ($pc) columns")
-    }
-    // CDC visibility: a version-consuming table must see every change as
-    // a (key, version) transition — update()'s contract, enforced here
-    // for every clause that writes rows
-    m.verCol.foreach { v =>
-      def reqVer(set: Map[String, Column], what: String): Unit =
-        require(set.contains(v),
-          s"this table is consumed via keys/cdf change feeds keyed on " +
-            s"version column $v: $what must assign a bumped $v in the same " +
-            "clause or the change is invisible to CDC consumers")
-      matched.foreach {
-        case MatchedUpdate(_, set) => reqVer(set, "WHEN MATCHED UPDATE")
-        case _ => ()
-      }
-      bySource.foreach {
-        case BySourceUpdate(_, set) =>
-          reqVer(set, "WHEN NOT MATCHED BY SOURCE UPDATE")
-        case _ => ()
-      }
-      notMatched.foreach(c => reqVer(c.values, "WHEN NOT MATCHED INSERT"))
+      reqVer(c.values, "WHEN NOT MATCHED INSERT")
     }
 
     // deterministic pairing: at most one source row per key (Delta's
@@ -3965,45 +4054,84 @@ object CommittedTable {
       notMatched: Seq[NotMatchedInsert] = Nil,
       bySource: Seq[BySourceClause] = Nil,
       crashPoint: String => Unit = _ => ()): Unit = {
+    val t = openTable(spark, path, "to merge into")
+    val p = planClauses(t, source, matched, notMatched, bySource) {
+      (scope, tSchema) =>
+        if (scope.isEmpty)
+          spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tSchema)
+        else read(spark, path, Some(scope))
+    }
+    // DROP = an unmatched source row no insert clause claims
+    val dropActs: Seq[Int] = -2 +:
+      (matched.zipWithIndex.collect { case (MatchedDelete(_), i) => i } ++
+       bySource.zipWithIndex.collect { case (BySourceDelete(_), i) => 2000 + i })
+    val assembled = p.withAct
+      .filter(!col("__graft_act").isin(dropActs.map(Int.box): _*))
+      .select(p.outCols: _*)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      // output partitions: updates may move rows, inserts may mint brand-
+      // new partitions — partitions gaining rows that were NOT in scope
+      // carry their existing content forward in the same generation
+      val outParts = assembled.select(col(p.pc).cast("string")).distinct()
+        .collect().map(_.getString(0))
+      require(!outParts.contains(null),
+        s"a WHEN clause produced a NULL ${p.pc} value; CommittedTable requires " +
+          "a concrete partition value per row (normalize in the clause)")
+      val scopeSet = p.scope.toSet
+      val carry = outParts.filterNot(scopeSet.contains)
+        .filter(t.m.segments.contains).toSeq
+      val finalDf =
+        if (carry.isEmpty) assembled
+        else assembled.unionByName(read(spark, path, Some(carry))
+          .select(t.m.cols.map(col).toIndexedSeq: _*))
+      val affected = (scopeSet ++ outParts).toSeq
+      if (affected.isEmpty) return
+      publishCow(t, "merge-clauses", p.pc, affected, finalDf,
+        checked = true, crashPoint)
+    } finally assembled.unpersist()
+  }
+
+  /** [[mergeClauses]]' and [[mergeClausesMor]]' shared plan: the contract
+    * checks, the scope (partitions whose rows can participate — matched
+    * keys found through the bloom-pruned point probe ([[readKeys]]), so
+    * segments that cannot hold a source key are never opened; BY SOURCE
+    * widens it to every live partition, the clause's definition), the
+    * `target` rows of that scope full-outer-joined to the source on the
+    * key, and the clause arbitration: ONE integer action per row in
+    * `__graft_act`, conditions tested in declaration order (SQL's
+    * first-true-wins), each evaluated once — matched clause i → i, insert
+    * i → 1000 + i, by-source i → 2000 + i, KEEP(-1) passes the target row
+    * through, DROP(-2) is an unmatched source row no insert claims.
+    * `outCols` is one output expression per table column: the acting
+    * clause's assignment, else the target value (NULL for a source-only
+    * row's unassigned insert columns since its t side is all-NULL), cast
+    * to the table's type so a clause can never drift a column's parquet
+    * type. */
+  private final case class ClausePlan(pc: String, scope: Seq[String],
+      withAct: DataFrame, outCols: Seq[org.apache.spark.sql.Column])
+
+  private def planClauses(t: Target, source: DataFrame,
+      matched: Seq[MatchedClause], notMatched: Seq[NotMatchedInsert],
+      bySource: Seq[BySourceClause])(
+      target: (Seq[String], org.apache.spark.sql.types.StructType) => DataFrame)
+      : ClausePlan = {
     import org.apache.spark.sql.Column
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val table = new Path(path)
-    val fs = table.getFileSystem(hconf)
-    val m = readManifest(fs, table).getOrElse(
-      throw new java.io.IOException(s"no committed table at $path to merge into"))
-    collectGarbage(fs, table)
-    val (key, pc) =
-      validateMergeClauses(m, path, source, matched, notMatched, bySource)
-    val cols = m.cols
-
-    // scope: partitions whose rows can participate. Matched keys are
-    // found through the bloom-pruned point probe (readKeys) — segments
-    // that cannot hold a source key are never opened. BY SOURCE widens
-    // the scope to every live partition (the clause's definition).
-    val liveParts = m.segments.keys.toSeq
-    val scope0: Seq[String] =
-      if (bySource.nonEmpty) liveParts
-      else readKeys(spark, path, source.select(col(key)).distinct(), key)
+    val (key, pc) = validateMergeClauses(t.m, t.path, source, matched,
+      notMatched, bySource)
+    val scope: Seq[String] =
+      if (bySource.nonEmpty) t.m.segments.keys.toSeq
+      else readKeys(t.spark, t.path, source.select(col(key)).distinct(), key)
         .select(col(pc)).distinct().collect().map(_.getString(0)).toSeq
-    val tSchema = schemaOf(spark, table, m)
-    val tgt0 =
-      if (scope0.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tSchema)
-      else read(spark, path, Some(scope0))
-
-    val joined = tgt0.withColumn("__graft_t", lit(true)).alias("t")
+    val tSchema = schemaOf(t.spark, t.table, t.m)
+    val joined = target(scope, tSchema)
+      .withColumn("__graft_t", lit(true)).alias("t")
       .join(source.withColumn("__graft_s", lit(true)).alias("s"),
         col(s"t.$key") === col(s"s.$key"), "full_outer")
     val isM = col("__graft_t").isNotNull && col("__graft_s").isNotNull
     val sOnly = col("__graft_s").isNotNull && col("__graft_t").isNull
     val tOnly = col("__graft_t").isNotNull && col("__graft_s").isNull
-
-    // clause arbitration: ONE integer action per row, conditions tested
-    // in declaration order (SQL's first-true-wins), each evaluated once.
-    // KEEP(-1) = pass the target row through; DROP(-2) = an unmatched
-    // source row no insert clause claims.
-    val KEEP = -1; val DROP = -2
     val cases: Seq[(Column, Int)] =
       matched.zipWithIndex.map { case (cl, i) =>
         (isM && cl.condition.getOrElse(lit(true)), i) } ++
@@ -4011,19 +4139,9 @@ object CommittedTable {
         (sOnly && cl.condition.getOrElse(lit(true)), 1000 + i) } ++
       bySource.zipWithIndex.map { case (cl, i) =>
         (tOnly && cl.condition.getOrElse(lit(true)), 2000 + i) }
-    val defaultAct: Column = when(sOnly, lit(DROP)).otherwise(lit(KEEP))
-    val act = cases.foldRight(defaultAct) { case ((c, v), acc) =>
-      when(c, lit(v)).otherwise(acc) }
-    val dropActs: Seq[Int] = DROP +:
-      (matched.zipWithIndex.collect { case (MatchedDelete(_), i) => i } ++
-       bySource.zipWithIndex.collect { case (BySourceDelete(_), i) => 2000 + i })
-
-    // one output expression per table column: the acting clause's
-    // assignment, else the target value (KEEP and unassigned-update
-    // columns; NULL for a source-only row's unassigned insert columns
-    // since its t side is all-NULL), cast to the table's type so a clause
-    // expression can never drift a column's parquet type
-    val outCols = tSchema.fields.map { f =>
+    val act = cases.foldRight(when(sOnly, lit(-2)).otherwise(lit(-1))) {
+      case ((c, v), acc) => when(c, lit(v)).otherwise(acc) }
+    val outCols = tSchema.fields.toSeq.map { f =>
       val c = f.name
       val byAct: Seq[(Int, Column)] =
         matched.zipWithIndex.collect {
@@ -4037,52 +4155,7 @@ object CommittedTable {
         when(col("__graft_act") === v, e).otherwise(acc) }
         .cast(f.dataType).as(c)
     }
-    val assembled = joined.withColumn("__graft_act", act)
-      .filter(!col("__graft_act").isin(dropActs.map(Int.box): _*))
-      .select(outCols.toIndexedSeq: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // output partitions: updates may move rows, inserts may mint brand-
-      // new partitions — partitions gaining rows that were NOT in scope
-      // carry their existing content forward in the same generation
-      val outParts = assembled.select(col(pc).cast("string")).distinct()
-        .collect().map(_.getString(0))
-      require(!outParts.contains(null),
-        s"a WHEN clause produced a NULL $pc value; CommittedTable requires " +
-          "a concrete partition value per row (normalize in the clause)")
-      val scopeSet = scope0.toSet
-      val carry = outParts.filterNot(scopeSet.contains)
-        .filter(m.segments.contains).toSeq
-      val finalDf =
-        if (carry.isEmpty) assembled
-        else assembled.unionByName(
-          read(spark, path, Some(carry)).select(cols.map(col).toIndexedSeq: _*))
-      val affected = (scopeSet ++ outParts).toSeq
-      if (affected.isEmpty) return
-
-      crashPoint("before-staging")
-      val gen = m.gen + 1
-      val (clSort, clFpp, clParts) = clusterArgs(m, affected.length)
-      val staged = stageSegments(finalDf, path, pc, gen,
-        sortCols = clSort, filesPerPartition = clFpp,
-        bucketing = m.bucketing, rangeClusterParts = clParts)
-      crashPoint("after-staging")
-      val (segStats, segCounts, segFileStats) =
-        statsFromStaged(spark, table, staged, pc, m.statsCols,
-          m.bloomCols, m.checks)
-      val next = m.copy(gen = gen,
-        fileStats = m.fileStats ++ segFileStats,
-        segments = (m.segments -- affected) ++
-          staged.view.filterKeys(affected.contains),
-        stats = (m.stats -- affected) ++
-          segStats.view.filterKeys(affected.contains),
-        rowCounts = (m.rowCounts -- affected) ++
-          segCounts.view.filterKeys(affected.contains))
-      crashPoint("before-swap")
-      publishOrAbort(hconf, table, m.gen, next, staged, op = Some("merge-clauses"))
-      crashPoint("after-swap")
-      collectGarbage(fs, table)
-    } finally assembled.unpersist()
+    ClausePlan(pc, scope, joined.withColumn("__graft_act", act), outCols)
   }
 
   /** Merge-on-read [[mergeClauses]] — the full SQL `MERGE INTO` clause
@@ -4100,57 +4173,18 @@ object CommittedTable {
     * partition (their definition: every unmatched target row must be
     * tested) but write only the claimed rows. Routed from SQL
     * `MERGE INTO` when the table declares TBLPROPERTIES
-    * 'updatemode'='mor'. Bucketed layouts stage their delta files
-    * bucket-split and `_NNNNN`-named like base segments (the
-    * exchange-free join contract survives); scan-scoped, loud abort
-    * under contention. */
+    * 'updatemode'='mor'. */
   def mergeClausesMor(spark: SparkSession, path: String, source: DataFrame,
       matched: Seq[MatchedClause] = Nil,
       notMatched: Seq[NotMatchedInsert] = Nil,
       bySource: Seq[BySourceClause] = Nil,
       crashPoint: String => Unit = _ => ()): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val table = new Path(path)
-    val fs = table.getFileSystem(hconf)
-    val m = readManifest(fs, table).getOrElse(
-      throw new java.io.IOException(s"no committed table at $path to merge into"))
-    collectGarbage(fs, table)
-    val (key, pc) =
-      validateMergeClauses(m, path, source, matched, notMatched, bySource)
-
-    // scope: same rule as the copy-on-write clause merge — bloom-pruned
-    // key probe unless BY SOURCE widens to every live partition
-    val scope0: Seq[String] =
-      if (bySource.nonEmpty) m.segments.keys.toSeq
-      else readKeys(spark, path, source.select(col(key)).distinct(), key)
-        .select(col(pc)).distinct().collect().map(_.getString(0)).toSeq
-    val tSchema = schemaOf(spark, table, m)
+    val t = openTable(spark, path, "to merge into")
     // target side WITH (file, pos) provenance — the positions a claiming
     // clause will retire
-    val tgt0 = readFrom(spark, table, m,
-      Some(scope0.toIndexedSeq), keepPos = true)
-
-    val joined = tgt0.withColumn("__graft_t", lit(true)).alias("t")
-      .join(source.withColumn("__graft_s", lit(true)).alias("s"),
-        col(s"t.$key") === col(s"s.$key"), "full_outer")
-    val isM = col("__graft_t").isNotNull && col("__graft_s").isNotNull
-    val sOnly = col("__graft_s").isNotNull && col("__graft_t").isNull
-    val tOnly = col("__graft_t").isNotNull && col("__graft_s").isNull
-
-    // identical arbitration to mergeClauses: first true clause acts
-    val KEEP = -1; val DROP = -2
-    val cases: Seq[(org.apache.spark.sql.Column, Int)] =
-      matched.zipWithIndex.map { case (cl, i) =>
-        (isM && cl.condition.getOrElse(lit(true)), i) } ++
-      notMatched.zipWithIndex.map { case (cl, i) =>
-        (sOnly && cl.condition.getOrElse(lit(true)), 1000 + i) } ++
-      bySource.zipWithIndex.map { case (cl, i) =>
-        (tOnly && cl.condition.getOrElse(lit(true)), 2000 + i) }
-    val defaultAct: org.apache.spark.sql.Column =
-      when(sOnly, lit(DROP)).otherwise(lit(KEEP))
-    val act = cases.foldRight(defaultAct) { case ((c, v), acc) =>
-      when(c, lit(v)).otherwise(acc) }
-
+    val p = planClauses(t, source, matched, notMatched, bySource)(
+      (scope, _) => readFrom(spark, t.table, t.m, Some(scope.toIndexedSeq),
+        keepPos = true))
     // actions that RETIRE the target row (update: superseded by its new
     // image; delete: gone) and actions that WRITE a row
     val retireActs: Seq[Int] =
@@ -4160,82 +4194,16 @@ object CommittedTable {
       notMatched.indices.map(1000 + _) ++
       bySource.zipWithIndex.collect {
         case (BySourceUpdate(_, _), i) => 2000 + i }
-
-    val outCols = tSchema.fields.map { f =>
-      val c = f.name
-      val byAct: Seq[(Int, org.apache.spark.sql.Column)] =
-        matched.zipWithIndex.collect {
-          case (MatchedUpdate(_, set), i) if set.contains(c) => i -> set(c) } ++
-        notMatched.zipWithIndex.map { case (cl, i) =>
-          (1000 + i) -> cl.values.getOrElse(c, lit(null)) } ++
-        bySource.zipWithIndex.collect {
-          case (BySourceUpdate(_, set), i) if set.contains(c) =>
-            (2000 + i) -> set(c) }
-      byAct.foldRight(col(s"t.$c")) { case ((v, e), acc) =>
-        when(col("__graft_act") === v, e).otherwise(acc) }
-        .cast(f.dataType).as(c)
-    }
-    val withAct = joined.withColumn("__graft_act", act)
+    val withAct = p.withAct
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val superseded = withAct.filter(col("__graft_t").isNotNull &&
-          col("__graft_act").isin(retireActs.map(Int.box): _*))
-        .select(col(s"t.$pc").cast("string").as("__part"),
-          col(s"t.$DvFileCol").as("file"), col(s"t.$DvPosCol").as("pos"))
-      val dvPerPart: Map[String, Long] = superseded.groupBy("__part")
-        .count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val superseded = positions(withAct.filter(col("__graft_t").isNotNull &&
+          col("__graft_act").isin(retireActs.map(Int.box): _*)), p.pc, "t.")
       val written = withAct
         .filter(col("__graft_act").isin(writeActs.map(Int.box): _*))
-        .select(outCols.toIndexedSeq: _*)
-
-      crashPoint("before-staging")
-      val gen = m.gen + 1
-      // bucketed tables stage their delta files through the SAME
-      // pmod(murmur3, n) split + _NNNNN naming as base segments, so
-      // FileSourceScanExec keeps grouping base ∪ delta files by bucket
-      // id and the exchange-free join contract survives the MoR publish
-      val staged = stageSegments(written, path, pc, gen,
-        sortCols = m.clusterBy.map(_._1).getOrElse(Nil),
-        bucketing = m.bucketing)
-      if (staged.isEmpty && dvPerPart.isEmpty) return // no clause fired
-      crashPoint("after-staging")
-      val (dStats, dCounts, dFileStats) =
-        statsFromStaged(spark, table, staged, pc, m.statsCols,
-          m.bloomCols, m.checks)
-      val newParts = staged.keySet -- m.segments.keySet
-      val deltaParts = staged.keySet & m.segments.keySet
-      crashPoint("before-dv-write")
-      val priors: Map[String, DvRef] = dvPerPart.keysIterator
-        .flatMap(p => liveDv(m, p).map(p -> _)).toMap
-      val dvName =
-        if (dvPerPart.isEmpty) None
-        else Some(stageDvDir(spark, table, m,
-          superseded.select(col("file"), col("pos")),
-          dvPerPart.keySet, gen))
-      val stats2 = deltaParts.foldLeft(m.stats) { (acc, p) =>
-        widenStats(acc.get(p), dStats.get(p), tSchema, m.statsCols) match {
-          case Some(s) => acc + (p -> s)
-          case None => acc - p
-        }
-      }
-      val next = m.copy(gen = gen,
-        segments = m.segments ++ staged.view.filterKeys(newParts).toMap,
-        stats = stats2 ++ dStats.view.filterKeys(newParts).toMap,
-        rowCounts = m.rowCounts ++ dCounts.view.filterKeys(newParts).toMap,
-        fileStats = m.fileStats ++ dFileStats,
-        deltas = m.deltas ++ deltaParts.map(p =>
-          p -> (liveDeltas(m, p) :+ DeltaRef(segLeaf(m.segments(p)),
-            staged(p), dCounts(p), gen))).toMap,
-        dvs = dvName.map(n => m.dvs ++ dvPerPart.keysIterator.map(p =>
-          p -> DvRef(segLeaf(m.segments(p)), n,
-            dvPerPart(p) + priors.get(p).map(_.rows).getOrElse(0L),
-            gen)).toMap).getOrElse(m.dvs))
-      crashPoint("before-swap")
-      try publishOrAbort(hconf, table, m.gen, next, staged, op = Some("merge-clauses-mor"))
-      catch { case e: Throwable =>
-        dvName.foreach(n => fs.delete(new Path(table, n), true)); throw e }
-      crashPoint("after-swap")
-      collectGarbage(fs, table)
+        .select(p.outCols: _*)
+      publishMor(t, "merge-clauses-mor", p.pc, superseded, Some(written),
+        inserts = true, crashPoint)
     } finally withAct.unpersist()
   }
 
@@ -4284,12 +4252,8 @@ object CommittedTable {
       zCols: Seq[String], bits: Int = 12,
       crashPoint: String => Unit = _ => (),
       filesPerPartition: Int = 1): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val table = new Path(path)
-    val fs = table.getFileSystem(hconf)
-    val m = readManifest(fs, table).getOrElse(
-      throw new java.io.IOException(s"no committed table at $path to compact"))
-    collectGarbage(fs, table)
+    val t = openTable(spark, path, "to compact")
+    import t.{fs, hconf, m, table}
     if (m.segments.isEmpty) return
     require(zCols.nonEmpty && zCols.forall(m.cols.contains),
       s"zCols must be table columns (${m.cols.mkString(",")}); got ${zCols.mkString(",")}")
@@ -4369,46 +4333,15 @@ object CommittedTable {
   def delete(spark: SparkSession, path: String, predicate:
       org.apache.spark.sql.Column, partitionCol: String,
       crashPoint: String => Unit = _ => ()): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val table = new Path(path)
-    val fs = table.getFileSystem(hconf)
-    val m = readManifest(fs, table).getOrElse(
-      throw new java.io.IOException(s"no committed table at $path to delete from"))
-    collectGarbage(fs, table)
-    if (m.segments.isEmpty) return
-    require(m.cols.contains(partitionCol),
-      s"$partitionCol is not a column of the committed table (${m.cols.mkString(",")})")
+    val t = openScoped(spark, path, "to delete from", partitionCol)
+      .getOrElse(return)
     val matched = predicate.isNotNull && predicate // NULL-safe: TRUE only
-    val affected: Array[String] = read(spark, path)
-      .filter(matched)
-      .select(col(partitionCol)).distinct()
-      .collect().map(_.getString(0))
+    val affected = partsMatching(spark, path, partitionCol, matched)
     if (affected.isEmpty) return // nothing matches: no generation burned
-
     // survivors of the affected partitions only (manifest-pruned read)
-    val keep = read(spark, path, Some(affected.toIndexedSeq)).filter(!matched)
-    crashPoint("before-staging")
-    val gen = m.gen + 1
-    val (clSort, clFpp, clParts) = clusterArgs(m, affected.length)
-    val staged = stageSegments(keep, path, partitionCol, gen,
-      sortCols = clSort, filesPerPartition = clFpp,
-      bucketing = m.bucketing, rangeClusterParts = clParts)
-    crashPoint("after-staging")
-    val (segStats, segCounts, segFileStats) =
-      statsFromStaged(spark, table, staged, partitionCol, m.statsCols,
-        m.bloomCols)
-    val next = m.copy(gen = gen,
-      fileStats = m.fileStats ++ segFileStats,
-      segments = (m.segments -- affected) ++
-        staged.view.filterKeys(affected.contains),
-      stats = (m.stats -- affected) ++
-        segStats.view.filterKeys(affected.contains),
-      rowCounts = (m.rowCounts -- affected) ++
-        segCounts.view.filterKeys(affected.contains))
-    crashPoint("before-swap")
-    publishOrAbort(hconf, table, m.gen, next, staged, op = Some("delete"))
-    crashPoint("after-swap")
-    collectGarbage(fs, table)
+    publishCow(t, "delete", partitionCol, affected,
+      read(spark, path, Some(affected)).filter(!matched),
+      checked = false, crashPoint)
   }
 
   /** Stage ONE deletion-vector parquet dir holding `newEntries` (file,
@@ -4471,70 +4404,36 @@ object CommittedTable {
     * any later rewrite of the partition (merge/update/compact/z-order,
     * which all read through the vectors and so MATERIALIZE the deletes)
     * changes the segment name and the entry self-invalidates; no verb
-    * clears anything. A second MoR delete on a partition folds the prior
-    * vector's entries into the new one (counts stay exact — the prior
-    * rows are invisible to the matching scan, so the sets are disjoint).
-    * Manifest row counts stay physical; every count surface
+    * clears anything. Manifest row counts stay physical; every count surface
     * (COUNT(*) metadata fold, root shard totals, CBO stats) subtracts
     * the per-partition dv rows, so logical counts stay EXACT with zero
     * scans. Zone maps / Bloom sidecars become conservative (they may
     * describe deleted rows): pruning stays sound — a vector only removes
     * rows — but the metadata MIN/MAX fold bails on dv-carrying
-    * partitions. Scan-scoped like [[delete]]: never rebases, loud abort
-    * under contention. Unreferenced vector dirs age out via GC exactly
+    * partitions. Unreferenced vector dirs age out via GC exactly
     * like manifest shards; a full [[compact]]/[[compactPartitions]] of
     * the affected partitions sheds the vectors entirely. */
   def deleteMor(spark: SparkSession, path: String, predicate:
       org.apache.spark.sql.Column, partitionCol: String,
       crashPoint: String => Unit = _ => ()): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val table = new Path(path)
-    val fs = table.getFileSystem(hconf)
-    val m = readManifest(fs, table).getOrElse(
-      throw new java.io.IOException(s"no committed table at $path to delete from"))
-    collectGarbage(fs, table)
-    if (m.segments.isEmpty) return
-    require(m.cols.contains(partitionCol),
-      s"$partitionCol is not a column of the committed table (${m.cols.mkString(",")})")
+    val t = openScoped(spark, path, "to delete from", partitionCol)
+      .getOrElse(return)
     val matched = predicate.isNotNull && predicate // NULL-safe: TRUE only
     // visible rows (prior vectors already anti-joined) with (file, pos)
     // provenance — the positions this publish will retire
-    val hits = readFrom(spark, table, m, None, keepPos = true)
-      .filter(matched)
-      .select(col(partitionCol).as("__part"),
-        col(DvFileCol).as("file"), col(DvPosCol).as("pos"))
-      .persist()
-    try {
-      val perPart: Map[String, Long] = hits.groupBy("__part").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (perPart.isEmpty) return // nothing matches: no generation burned
-      val affected = perPart.keySet
-      crashPoint("before-dv-write")
-      val gen = m.gen + 1
-      val priors: Map[String, DvRef] =
-        affected.iterator.flatMap(p => liveDv(m, p).map(p -> _)).toMap
-      val dvName = stageDvDir(spark, table, m,
-        hits.select(col("file"), col("pos")), affected, gen)
-      crashPoint("before-swap")
-      val next = m.copy(gen = gen, dvs = m.dvs ++ affected.map(p =>
-        p -> DvRef(segLeaf(m.segments(p)), dvName,
-          perPart(p) + priors.get(p).map(_.rows).getOrElse(0L), gen)))
-      try publishOrAbort(hconf, table, m.gen, next, Map.empty, op = Some("delete-mor"))
-      catch { case e: Throwable =>
-        fs.delete(new Path(table, dvName), true); throw e }
-      crashPoint("after-swap")
-      collectGarbage(fs, table)
-    } finally hits.unpersist()
+    val hits = positions(readFrom(spark, t.table, t.m, None, keepPos = true)
+      .filter(matched), partitionCol).persist()
+    try publishMor(t, "delete-mor", partitionCol, hits, None,
+      inserts = false, crashPoint)
+    finally hits.unpersist()
   }
 
   /** Row-level UPDATE with the table's atomic publish: for every row
     * where `predicate` is TRUE (NULL = not matched = untouched, the SQL
     * UPDATE contract), replace each assigned column with its expression
     * (evaluated against the row's CURRENT values, all assignments
-    * simultaneous — `a -> b, b -> a` swaps). Same partition-scoped
-    * rewrite as [[delete]]: only partitions holding a match are staged,
-    * untouched partitions keep their existing segments, one manifest
-    * swap publishes, fencing/retention/GC inherited.
+    * simultaneous — `a -> b, b -> a` swaps). Only partitions holding a
+    * match are restaged.
     *
     * The partition column cannot be assigned (a row changing partition
     * is a key MOVE — that is [[merge]]'s latest-version-wins job, and
@@ -4557,15 +4456,28 @@ object CommittedTable {
       partitionCol: String,
       crashPoint: String => Unit = _ => (),
       versionCol: Option[String] = None): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val table = new Path(path)
-    val fs = table.getFileSystem(hconf)
-    val m = readManifest(fs, table).getOrElse(
-      throw new java.io.IOException(s"no committed table at $path to update"))
-    collectGarbage(fs, table)
-    if (m.segments.isEmpty || assignments.isEmpty) return
-    require(m.cols.contains(partitionCol),
-      s"$partitionCol is not a column of the committed table (${m.cols.mkString(",")})")
+    val t = openScoped(spark, path, "to update", partitionCol,
+      noop = assignments.isEmpty).getOrElse(return)
+    validateUpdate(t.m, partitionCol, assignments, versionCol)
+    val matched = predicate.isNotNull && predicate
+    val affected = partsMatching(spark, path, partitionCol, matched)
+    if (affected.isEmpty) return
+    // simultaneous assignment: every expression sees pre-update values
+    val rewritten = t.m.cols.map { c =>
+      assignments.get(c) match {
+        case Some(e) => when(matched, e).otherwise(col(c)).as(c)
+        case None => col(c)
+      }
+    }
+    publishCow(t, "update", partitionCol, affected,
+      read(spark, path, Some(affected)).select(rewritten.toIndexedSeq: _*),
+      checked = true, crashPoint)
+  }
+
+  /** [[update]]'s and [[updateMor]]'s shared contract checks. */
+  private def validateUpdate(m: Manifest, partitionCol: String,
+      assignments: Map[String, org.apache.spark.sql.Column],
+      versionCol: Option[String]): Unit = {
     val unknown = assignments.keySet -- m.cols.toSet
     require(unknown.isEmpty,
       s"cannot assign columns the table lacks: ${unknown.mkString(",")} " +
@@ -4582,44 +4494,6 @@ object CommittedTable {
           "unchanged and the change invisible to CDC consumers — assign a " +
           "bumped version in the same update")
     }
-    val matched = predicate.isNotNull && predicate
-    val affected: Array[String] = read(spark, path)
-      .filter(matched)
-      .select(col(partitionCol)).distinct()
-      .collect().map(_.getString(0))
-    if (affected.isEmpty) return
-
-    // simultaneous assignment: every expression sees pre-update values
-    val rewritten = m.cols.map { c =>
-      assignments.get(c) match {
-        case Some(e) => when(matched, e).otherwise(col(c)).as(c)
-        case None => col(c)
-      }
-    }
-    val upd = read(spark, path, Some(affected.toIndexedSeq))
-      .select(rewritten.toIndexedSeq: _*)
-    crashPoint("before-staging")
-    val gen = m.gen + 1
-    val (clSort, clFpp, clParts) = clusterArgs(m, affected.length)
-    val staged = stageSegments(upd, path, partitionCol, gen,
-      sortCols = clSort, filesPerPartition = clFpp,
-      bucketing = m.bucketing, rangeClusterParts = clParts)
-    crashPoint("after-staging")
-    val (segStats, segCounts, segFileStats) =
-      statsFromStaged(spark, table, staged, partitionCol, m.statsCols,
-        m.bloomCols, m.checks)
-    val next = m.copy(gen = gen,
-      fileStats = m.fileStats ++ segFileStats,
-      segments = (m.segments -- affected) ++
-        staged.view.filterKeys(affected.contains),
-      stats = (m.stats -- affected) ++
-        segStats.view.filterKeys(affected.contains),
-      rowCounts = (m.rowCounts -- affected) ++
-        segCounts.view.filterKeys(affected.contains))
-    crashPoint("before-swap")
-    publishOrAbort(hconf, table, m.gen, next, staged, op = Some("update"))
-    crashPoint("after-swap")
-    collectGarbage(fs, table)
   }
 
   /** Pair-wise min/max widening of a partition's zone-map entry by a
@@ -4683,15 +4557,7 @@ object CommittedTable {
     * table whose writes all go through the keyed verbs never has
     * duplicates. Schema widening stays on [[merge]] with
     * allowAddColumns (every file of a partition must agree on its
-    * column set) and is refused loudly here. Bucketed layouts are
-    * honored: delta files stage through the same pmod(murmur3, n)
-    * split and `_NNNNN` naming as base segments, so FileSourceScanExec
-    * keeps grouping base ∪ delta files by bucket id and the
-    * exchange-free join contract survives every MoR publish
-    * (BucketedTableSpec pins the shuffle-free plan post-merge). New
-    * partition values stage as ordinary first segments (nothing to
-    * extend). Scan-scoped like [[deleteMor]]: never rebases, loud abort
-    * under contention.
+    * column set) and is refused loudly here.
     *
     * Candidate partitions come from the bloom-sidecar key probe
     * ([[readKeys]]' prune) when the key is bloomed — the existing-side
@@ -4700,19 +4566,9 @@ object CommittedTable {
   def mergeMor(spark: SparkSession, path: String, updates: DataFrame,
       key: String, versionCol: String, partitionCol: String,
       crashPoint: String => Unit = _ => ()): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val table = new Path(path)
-    val fs = table.getFileSystem(hconf)
-    val m = readManifest(fs, table).getOrElse(
-      throw new java.io.IOException(s"no committed table at $path to merge into"))
-    collectGarbage(fs, table)
-    require(updates.columns.contains(partitionCol) && updates.columns.contains(key)
-        && updates.columns.contains(versionCol),
-      s"updates must carry $key, $versionCol, $partitionCol")
-    val missingCols = m.cols.toSet -- updates.columns.toSet
-    require(missingCols.isEmpty,
-      s"updates are missing table columns ${missingCols.mkString(",")}: " +
-        "dropping or renaming a column is not supported by mergeMor")
+    val t = openTable(spark, path, "to merge into")
+    val m = t.m
+    requireMergeBatch(m, updates, key, versionCol, partitionCol, "mergeMor")
     val added = updates.columns.toSeq.filterNot(m.cols.contains)
     require(added.isEmpty,
       s"updates carry columns ${added.mkString(",")} the table lacks; " +
@@ -4738,14 +4594,9 @@ object CommittedTable {
     try {
       val updKeys = upd.select(col(key)).distinct()
       // matched existing rows WITH (file, pos) provenance, partition set
-      // bloom-pruned when the key carries sidecars — guard BEFORE the
-      // probe collect: an unbloomed key made every mergeMor pay a full
-      // distinct+collect job whose result bloomSurvivors then discarded
-      val pruned =
-        if (!m.bloomCols.contains(key)) None
-        else probeHashes(updKeys, key)
-          .flatMap(hs => bloomSurvivors(spark, table, m, key, hs))
-      val existing = readFrom(spark, table, m, pruned, keepPos = true)
+      // bloom-pruned when the key carries sidecars
+      val existing = readFrom(spark, t.table, m,
+          keyCandidates(spark, t.table, m, updKeys, key), keepPos = true)
         .join(updKeys, Seq(key), "left_semi").persist()
       try {
         val exVer = existing.select(col(key).as("__exk"),
@@ -4758,72 +4609,14 @@ object CommittedTable {
         // superseded: existing rows a strictly newer update replaces
         val updVer = upd.select(col(key).as("__upk"),
           col(versionCol).as("__upv"))
-        val superseded = existing.join(updVer,
+        val superseded = positions(existing.join(updVer,
             existing(key) === updVer("__upk"))
-          .filter(col("__upv") > existing(versionCol))
-          .select(existing(partitionCol).cast("string").as("__part"),
-            existing(DvFileCol).as("file"), existing(DvPosCol).as("pos"))
+          .filter(col("__upv") > existing(versionCol)), partitionCol)
           .persist()
-        try {
-          val dvPerPart: Map[String, Long] = superseded.groupBy("__part")
-            .count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          crashPoint("before-staging")
-          val gen = m.gen + 1
-          // delta files inherit the declared clustering's SORT (zone-map
-          // tightness), never its file fan-out — a delta batch is small
-          // bucketed layouts: delta files stage through the same
-          // pmod(murmur3, n) split + _NNNNN naming as base segments —
-          // the exchange-free join survives the MoR publish
-          val staged = stageSegments(winners, path, partitionCol, gen,
-            sortCols = m.clusterBy.map(_._1).getOrElse(Nil),
-            bucketing = m.bucketing)
-          if (staged.isEmpty && dvPerPart.isEmpty) return // no-op batch
-          crashPoint("after-staging")
-          val (dStats, dCounts, dFileStats) =
-            statsFromStaged(spark, table, staged, partitionCol, m.statsCols,
-              m.bloomCols, m.checks)
-          val newParts = staged.keySet -- m.segments.keySet
-          val deltaParts = staged.keySet & m.segments.keySet
-          crashPoint("before-dv-write")
-          val priors: Map[String, DvRef] = dvPerPart.keysIterator
-            .flatMap(p => liveDv(m, p).map(p -> _)).toMap
-          val dvName =
-            if (dvPerPart.isEmpty) None
-            else Some(stageDvDir(spark, table, m,
-              superseded.select(col("file"), col("pos")),
-              dvPerPart.keySet, gen))
-          // widened partition zone maps: union bound over base ∪ delta
-          val schema = schemaOf(spark, table, m)
-          val stats2 = deltaParts.foldLeft(m.stats) { (acc, p) =>
-            widenStats(acc.get(p), dStats.get(p), schema, m.statsCols) match {
-              case Some(s) => acc + (p -> s)
-              case None => acc - p
-            }
-          }
-          val next = m.copy(gen = gen,
-            segments = m.segments ++
-              staged.view.filterKeys(newParts).toMap,
-            stats = stats2 ++ dStats.view.filterKeys(newParts).toMap,
-            rowCounts = m.rowCounts ++
-              dCounts.view.filterKeys(newParts).toMap,
-            fileStats = m.fileStats ++ dFileStats,
-            deltas = m.deltas ++ deltaParts.map(p =>
-              p -> (liveDeltas(m, p) :+ DeltaRef(segLeaf(m.segments(p)),
-                staged(p), dCounts(p), gen))).toMap,
-            dvs = dvName.map(n => m.dvs ++ dvPerPart.keysIterator.map(p =>
-              p -> DvRef(segLeaf(m.segments(p)), n,
-                dvPerPart(p) + priors.get(p).map(_.rows).getOrElse(0L),
-                gen)).toMap).getOrElse(m.dvs),
-            partitionCol = m.partitionCol.orElse(Some(partitionCol)),
-            keyCol = m.keyCol.orElse(Some(key)),
-            verCol = m.verCol.orElse(Some(versionCol)))
-          crashPoint("before-swap")
-          try publishOrAbort(hconf, table, m.gen, next, staged, op = Some("merge-mor"))
-          catch { case e: Throwable =>
-            dvName.foreach(n => fs.delete(new Path(table, n), true)); throw e }
-          crashPoint("after-swap")
-          collectGarbage(fs, table)
-        } finally superseded.unpersist()
+        try publishMor(t.copy(m = withRoles(m, partitionCol, key, versionCol)),
+          "merge-mor", partitionCol, superseded, Some(winners),
+          inserts = true, crashPoint)
+        finally superseded.unpersist()
       } finally existing.unpersist()
     } finally upd.unpersist()
   }
@@ -4834,96 +4627,27 @@ object CommittedTable {
     * guard) with [[mergeMor]]'s cost shape — the matched rows' positions
     * publish as a deletion vector and their updated images as delta
     * segments, O(matched rows) written instead of O(affected partitions'
-    * bytes) rewritten. Updated images re-validate the table's CHECK
-    * constraints (an assignment can violate one; carried rows already
-    * passed). Bucketed layouts stage their delta files bucket-split and
-    * `_NNNNN`-named like base segments, so the exchange-free join
-    * contract survives; scan-scoped, loud abort under contention. */
+    * bytes) rewritten. */
   def updateMor(spark: SparkSession, path: String,
       predicate: org.apache.spark.sql.Column,
       assignments: Map[String, org.apache.spark.sql.Column],
       partitionCol: String,
       crashPoint: String => Unit = _ => (),
       versionCol: Option[String] = None): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val table = new Path(path)
-    val fs = table.getFileSystem(hconf)
-    val m = readManifest(fs, table).getOrElse(
-      throw new java.io.IOException(s"no committed table at $path to update"))
-    collectGarbage(fs, table)
-    if (m.segments.isEmpty || assignments.isEmpty) return
-    require(m.cols.contains(partitionCol),
-      s"$partitionCol is not a column of the committed table (${m.cols.mkString(",")})")
-    val unknown = assignments.keySet -- m.cols.toSet
-    require(unknown.isEmpty,
-      s"cannot assign columns the table lacks: ${unknown.mkString(",")} " +
-        "(schema widening is merge's allowAddColumns)")
-    require(!assignments.contains(partitionCol),
-      s"cannot assign the partition column $partitionCol: a row changing " +
-        "partition is a key move — use merge (latest-version-wins) instead")
-    versionCol.foreach { v =>
-      require(m.cols.contains(v),
-        s"versionCol $v is not a column of the committed table (${m.cols.mkString(",")})")
-      require(assignments.contains(v),
-        s"this table is consumed via keys/cdf change feeds keyed on version " +
-          s"column $v: an update that does not assign $v leaves (key, version) " +
-          "unchanged and the change invisible to CDC consumers — assign a " +
-          "bumped version in the same update")
-    }
+    val t = openScoped(spark, path, "to update", partitionCol,
+      noop = assignments.isEmpty).getOrElse(return)
+    validateUpdate(t.m, partitionCol, assignments, versionCol)
     val matched = predicate.isNotNull && predicate
-    val hits = readFrom(spark, table, m, None, keepPos = true)
+    val hits = readFrom(spark, t.table, t.m, None, keepPos = true)
       .filter(matched).persist()
     try {
-      val dvPerPart: Map[String, Long] = hits
-        .groupBy(col(partitionCol).cast("string").as("__part")).count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (dvPerPart.isEmpty) return // nothing matches: no generation burned
-      // updated images: simultaneous assignments over the matched rows
-      val images = hits.select(m.cols.map { c =>
+      // one image per matched row: the partition column is unassignable,
+      // so every image extends an existing partition
+      val images = hits.select(t.m.cols.map { c =>
         assignments.get(c).map(_.as(c)).getOrElse(col(c))
       }.toIndexedSeq: _*)
-      crashPoint("before-staging")
-      val gen = m.gen + 1
-      // bucketed layouts: delta files stage bucket-split and _NNNNN-named
-      // like base segments, keeping the exchange-free join contract
-      val staged = stageSegments(images, path, partitionCol, gen,
-        sortCols = m.clusterBy.map(_._1).getOrElse(Nil),
-        bucketing = m.bucketing)
-      crashPoint("after-staging")
-      val (dStats, dCounts, dFileStats) =
-        statsFromStaged(spark, table, staged, partitionCol, m.statsCols,
-          m.bloomCols, m.checks)
-      crashPoint("before-dv-write")
-      val priors: Map[String, DvRef] = dvPerPart.keysIterator
-        .flatMap(p => liveDv(m, p).map(p -> _)).toMap
-      val dvName = stageDvDir(spark, table, m,
-        hits.select(col(DvFileCol).as("file"), col(DvPosCol).as("pos")),
-        dvPerPart.keySet, gen)
-      // the partition column is unassignable, so every staged value is an
-      // existing partition — all deltas, no new segments
-      val schema = schemaOf(spark, table, m)
-      val stats2 = staged.keySet.foldLeft(m.stats) { (acc, p) =>
-        widenStats(acc.get(p), dStats.get(p), schema, m.statsCols) match {
-          case Some(s) => acc + (p -> s)
-          case None => acc - p
-        }
-      }
-      val next = m.copy(gen = gen,
-        stats = stats2,
-        fileStats = m.fileStats ++ dFileStats,
-        deltas = m.deltas ++ staged.keysIterator.map(p =>
-          p -> (liveDeltas(m, p) :+ DeltaRef(segLeaf(m.segments(p)),
-            staged(p), dCounts(p), gen))).toMap,
-        dvs = m.dvs ++ dvPerPart.keysIterator.map(p =>
-          p -> DvRef(segLeaf(m.segments(p)), dvName,
-            dvPerPart(p) + priors.get(p).map(_.rows).getOrElse(0L),
-            gen)).toMap)
-      crashPoint("before-swap")
-      try publishOrAbort(hconf, table, m.gen, next, staged, op = Some("update-mor"))
-      catch { case e: Throwable =>
-        fs.delete(new Path(table, dvName), true); throw e }
-      crashPoint("after-swap")
-      collectGarbage(fs, table)
+      publishMor(t, "update-mor", partitionCol, positions(hits, partitionCol),
+        Some(images), inserts = false, crashPoint)
     } finally hits.unpersist()
   }
 
@@ -4958,13 +4682,8 @@ object CommittedTable {
       keyCol: Option[String] = None, versionCol: Option[String] = None,
       bloomCols: Option[Seq[String]] = None): Unit = {
     val spark = df.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val table = new Path(path)
-    val fs = table.getFileSystem(hconf)
-    val m = readManifest(fs, table).getOrElse(
-      throw new java.io.IOException(
-        s"no committed table at $path to overwrite; use write() to create"))
-    collectGarbage(fs, table)
+    val t = openTable(spark, path, "to overwrite; use write() to create")
+    import t.{fs, hconf, m, table}
     val cols = df.columns.toSet
     def inherit(explicit: Option[String], cur: Option[String]): Option[String] =
       explicit.orElse(cur.filter(cols.contains))
@@ -5097,12 +4816,8 @@ object CommittedTable {
       sortCols: Seq[String] = Nil,
       crashPoint: String => Unit = _ => (),
       filesPerPartition: Int = 1): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val table = new Path(path)
-    val fs = table.getFileSystem(hconf)
-    val m = readManifest(fs, table).getOrElse(
-      throw new java.io.IOException(s"no committed table at $path to compact"))
-    collectGarbage(fs, table)
+    val t = openTable(spark, path, "to compact")
+    import t.{fs, hconf, m, table}
     if (m.segments.isEmpty) return
     val cur = read(spark, path).select(m.cols.map(col).toIndexedSeq: _*)
     crashPoint("before-staging")
@@ -5165,12 +4880,8 @@ object CommittedTable {
       partitions: Seq[String], sortCols: Seq[String] = Nil,
       filesPerPartition: Int = 1,
       crashPoint: String => Unit = _ => ()): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val table = new Path(path)
-    val fs = table.getFileSystem(hconf)
-    val m = readManifest(fs, table).getOrElse(
-      throw new java.io.IOException(s"no committed table at $path to compact"))
-    collectGarbage(fs, table)
+    val t = openTable(spark, path, "to compact")
+    import t.{fs, hconf, m, table}
     if (partitions.isEmpty) return
     val pc = m.partitionCol.getOrElse(
       throw new UnsupportedOperationException(

@@ -39,11 +39,16 @@ private[sql] object GraftRel {
   *    vectorized scan, pushed filters, and manifest/zone-map segment
   *    pruning, identical plan shape to the Scala read path;
   *  - `DELETE FROM` / `UPDATE` / `MERGE INTO` / `INSERT INTO` become
-  *    [[GraftDmlCommand]]s that run the existing
-  *    `CommittedTable.delete/update/merge` protocol — one write path, so
-  *    SQL writes inherit atomic publish, generation fencing, retention,
-  *    zone-map upkeep and CDC visibility for free (GraftCatalogSpec
-  *    races a SQL DELETE against a Scala merge to pin the fencing).
+  *    [[GraftDmlCommand]]s that call the same `CommittedTable` verbs as
+  *    the Scala API, so they run its one row-level core: the verb works
+  *    out the rows it retires and the rows it writes, then a
+  *    copy-on-write publish (restage the affected partitions) or, under
+  *    TBLPROPERTIES 'deletemode'/'updatemode' = 'mor', a merge-on-read
+  *    publish (deletion vector + delta segments) makes them one
+  *    generation. SQL writes thereby inherit atomic publish, generation
+  *    fencing, retention, zone-map upkeep and CDC visibility
+  *    (GraftCatalogSpec races a SQL DELETE against a Scala merge to pin
+  *    the fencing).
   *
   * Routing needs the table-role metadata from the manifest: the
   * partition column for every verb, key/version for MERGE (and the

@@ -120,6 +120,7 @@ object JobProfile {
     val wall = (System.nanoTime() - t0) / 1e9
     sampling = false
     spark.sparkContext.removeSparkListener(listener)
+    spark.sparkContext.removeSparkListener(sqlListener)
     // drain pending listener events before reading
     Thread.sleep(500)
 

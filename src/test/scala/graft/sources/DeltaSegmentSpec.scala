@@ -315,6 +315,82 @@ class DeltaSegmentSpec extends SparkSpec {
         "id", "version", "status")
       assert(rows(dir).contains((2L, "A", 21.0, 2L)))
     }
+    // the same protocol for all ten DML verbs, over every label each fires
+    import CommittedTable.{MatchedUpdate, NotMatchedInsert}
+    val upserts = () => Seq((2L, "A", 21.0, 2L), (7L, "C", 70.0, 2L))
+      .toDF("id", "status", "value", "version")
+    val keys = () => Seq(2L, 4L).toDF("id")
+    val bump = Map("value" -> lit(99.0), "version" -> lit(2L))
+    val src = () => Seq((2L, 99.0), (8L, 80.0)).toDF("id", "sval")
+    val mUpd = Seq(MatchedUpdate(None,
+      Map("value" -> expr("s.sval"), "version" -> lit(2L))))
+    val ins = Seq(NotMatchedInsert(None, Map("id" -> expr("s.id"),
+      "status" -> lit("C"), "value" -> expr("s.sval"),
+      "version" -> lit(2L))))
+    val cow = Seq("before-staging", "after-staging", "before-swap",
+      "after-swap")
+    val mor = Seq("before-staging", "after-staging", "before-dv-write",
+      "before-swap", "after-swap")
+    val vectorOnly = Seq("before-dv-write", "before-swap", "after-swap")
+    // every verb is idempotent on this data, so a rerun after any crash
+    // must land exactly where an uninterrupted run does
+    val verbs: Seq[(String, Seq[String], (String, String => Unit) => Unit)] =
+      Seq(
+        ("merge", cow, (d, cp) => CommittedTable.merge(spark, d, upserts(),
+          "id", "version", "status", crashPoint = cp)),
+        ("mergeMor", mor, (d, cp) => CommittedTable.mergeMor(spark, d,
+          upserts(), "id", "version", "status", crashPoint = cp)),
+        ("delete", cow, (d, cp) => CommittedTable.delete(spark, d,
+          $"id" === 2L, "status", crashPoint = cp)),
+        ("deleteMor", vectorOnly, (d, cp) => CommittedTable.deleteMor(spark,
+          d, $"id" === 2L, "status", crashPoint = cp)),
+        ("deleteKeys", cow, (d, cp) => CommittedTable.deleteKeys(spark, d,
+          keys(), "id", "status", crashPoint = cp)),
+        ("deleteKeysMor", vectorOnly, (d, cp) => CommittedTable.deleteKeysMor(
+          spark, d, keys(), "id", "status", crashPoint = cp)),
+        ("update", cow, (d, cp) => CommittedTable.update(spark, d,
+          $"status" === "A", bump, "status", crashPoint = cp)),
+        ("updateMor", mor, (d, cp) => CommittedTable.updateMor(spark, d,
+          $"status" === "A", bump, "status", crashPoint = cp)),
+        ("mergeClauses", cow, (d, cp) => CommittedTable.mergeClauses(spark,
+          d, src(), mUpd, ins, crashPoint = cp)),
+        ("mergeClausesMor", mor, (d, cp) => CommittedTable.mergeClausesMor(
+          spark, d, src(), mUpd, ins, crashPoint = cp)))
+    def fresh(tag: String): String = {
+      val d = freshDir(tag)
+      CommittedTable.write(base(), d, "status",
+        keyCol = Some("id"), versionCol = Some("version"),
+        bloomCols = Seq("id"))
+      d
+    }
+    for ((name, labels, run) <- verbs) {
+      // the uninterrupted run: which labels fire, in which order, and the
+      // table it leaves
+      val clean = fresh(s"$name-clean")
+      val before = rows(clean)
+      val fired = scala.collection.mutable.Buffer.empty[String]
+      run(clean, fired += _)
+      assert(fired.toSeq === labels, s"$name crash labels")
+      val after = rows(clean)
+      assert(after !== before, s"$name changed nothing")
+      for (point <- labels) {
+        val dir = fresh(s"$name-$point")
+        val boom = intercept[RuntimeException] {
+          run(dir, p => if (p == point) throw new RuntimeException(s"kill@$p"))
+        }
+        assert(boom.getMessage === s"kill@$point")
+        // old before the swap, new after it — never a mix
+        val seen = rows(dir)
+        if (point == "after-swap")
+          assert(seen === after, s"$name@$point: new table not visible")
+        else assert(seen === before, s"$name@$point: mix visible")
+        CommittedTable.recover(spark, dir)
+        run(dir, _ => ())
+        assert(rows(dir) === after, s"$name@$point: rerun diverged")
+        assert(CommittedTable.count(spark, dir) === after.size.toLong,
+          s"$name@$point: metadata count drifted")
+      }
+    }
   }
 
   test("a MoR winner aborts a concurrent compactPartitions rebase " +

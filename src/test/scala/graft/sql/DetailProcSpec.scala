@@ -138,4 +138,47 @@ class DetailProcSpec extends SparkSpec {
             SELECT rows - lag(rows) OVER (ORDER BY generation) AS d
             FROM graft_history('$dir')) WHERE d < 0""").as[Long].head === 1L)
   }
+
+  test("graft_history labels every DML verb's generation with its exact " +
+      "operation") {
+    import CommittedTable.MatchedUpdate
+    val dir = Files.createTempDirectory("graft-hist-ops").toString + "/t"
+    val src = spark.range(0, 20)
+      .select(when(col("id") % 2 === 0, "A").otherwise("B").as("part"),
+        col("id").as("key"), lit(1L).as("version"),
+        col("id").cast("double").as("value"))
+    CommittedTable.write(src, dir, "part",
+      keyCol = Some("key"), versionCol = Some("version"),
+      retainGenerations = 12)
+    def batch(keys: Long*) = keys
+      .map(k => (if (k % 2 == 0) "A" else "B", k, 2L, k * 10.0))
+      .toDF("part", "key", "version", "value")
+    val bump = Map("value" -> lit(-1.0), "version" -> lit(3L))
+    def setVal(k: Long) = (Seq((k, 0.5)).toDF("key", "sval"),
+      Seq(MatchedUpdate(None,
+        Map("value" -> expr("s.sval"), "version" -> lit(3L)))))
+    CommittedTable.merge(spark, dir, batch(0L, 100L), "key", "version", "part")
+    CommittedTable.mergeMor(spark, dir, batch(1L, 101L),
+      "key", "version", "part")
+    CommittedTable.delete(spark, dir, col("key") === 2L, "part")
+    CommittedTable.deleteMor(spark, dir, col("key") === 3L, "part")
+    CommittedTable.deleteKeys(spark, dir, Seq(4L).toDF("key"), "key", "part")
+    CommittedTable.deleteKeysMor(spark, dir, Seq(5L).toDF("key"),
+      "key", "part")
+    CommittedTable.update(spark, dir, col("key") === 6L, bump, "part",
+      versionCol = Some("version"))
+    CommittedTable.updateMor(spark, dir, col("key") === 7L, bump, "part",
+      versionCol = Some("version"))
+    val (s8, m8) = setVal(8L)
+    CommittedTable.mergeClauses(spark, dir, s8, matched = m8)
+    val (s9, m9) = setVal(9L)
+    CommittedTable.mergeClausesMor(spark, dir, s9, matched = m9)
+    val expected = Seq("write", "merge", "merge-mor", "delete", "delete-mor",
+      "delete-keys", "delete-keys-mor", "update", "update-mor",
+      "merge-clauses", "merge-clauses-mor")
+    assert(spark.sql(s"SELECT operation FROM graft_history('$dir') " +
+      "ORDER BY generation").as[String].collect().toSeq === expected)
+    assert(spark.sql(s"CALL graft.history(table => '$dir')")
+      .select("operation").as[String].collect().toSeq === expected)
+  }
 }
